@@ -22,6 +22,16 @@ Semantics reproduced from the reference:
 - missing stream → error at analysis time (WS close 1013 analog,
   app/app.py:311-318).
 
+Where the read runs: a streaming read is a `SimpleDataSourceStreamReader`.
+Each trigger's `read(start)` runs inside the engine's `latestOffset` call,
+in the query's driver-side Python process, and the Arrow batches it
+returns reach the JVM with the planned partition; the micro-batch task
+then runs in the JVM alone, without a Python worker. That fits this
+source: every stream is one partition by design, so there is no read
+parallelism to lose, and the relayed rows end on the driver for the
+socket anyway. Only the replay of an uncommitted batch after a restart
+(`readBetweenOffsets`) and batch reads run as Python tasks.
+
 Usage:
     spark.dataSource.register(EventStreamDataSource)
     spark.readStream.format("eventstream")
@@ -40,8 +50,8 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
     BinaryType,
@@ -166,25 +176,53 @@ ARROW_BATCH_ROWS = 10_000
 
 def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int | None):
     """Yield pyarrow RecordBatches of (key, value, offset, timestamp) for
-    offsets in (start_exclusive, end_inclusive].
+    offsets in (start_exclusive, end_inclusive], in Spark's Arrow schema
+    for ENVELOPE (UTC timestamps), which both readers hand on as is.
 
-    Arrow batches cross the worker boundary zero-copy — ~an order of
-    magnitude faster than row-at-a-time tuple yields for high-volume
-    replay (the Python Data Source API accepts either).
+    Arrow batches cross into the JVM without a per-row conversion — ~an
+    order of magnitude faster than row-at-a-time tuple yields for
+    high-volume replay (the Python Data Source API accepts either).
     """
+    import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.json as pajson
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
-    if not os.path.exists(path):
+    if not os.path.exists(path) or (
+        end_inclusive is not None and end_inclusive <= start_exclusive
+    ):
+        return
+    # The log is only appended to or replaced whole (enforce_retention),
+    # never truncated in place, so the mapping stays valid while parsed.
+    with pa.memory_map(path) as f:
+        data = f.read_buffer()
+    # bytes after the last newline are a record still being appended
+    end = data.size
+    while end:
+        lo = max(0, end - 65536)
+        cut = data[lo:end].to_pybytes().rfind(b"\n")
+        if cut >= 0:
+            end = lo + cut + 1
+            break
+        end = lo
+    if not end:
         return
 
     # C++-side JSONL parse (~10× a Python json.loads loop), then a
     # vectorized offset-range filter — the whole read never touches
-    # Python-object rows.
+    # Python-object rows. Nor does it convert a Python value: pyarrow
+    # imports pandas (~0.25 s) on its first such conversion, and every
+    # streaming query reads in a Python process of its own. So the
+    # scalars and the key column are built from raw buffers.
+    def int64(v: int):
+        return pa.Array.from_buffers(
+            pa.int64(), 1, [None, pa.py_buffer(np.array([v], dtype=np.int64))]
+        )[0]
+
     tbl = pajson.read_json(
-        path,
+        pa.BufferReader(data[:end]),
         parse_options=pajson.ParseOptions(
             explicit_schema=pa.schema(
                 [("offset", pa.int64()), ("timestamp", pa.int64()), ("value", pa.string())]
@@ -192,19 +230,21 @@ def _read_log(root: str, stream: str, start_exclusive: int, end_inclusive: int |
             unexpected_field_behavior="ignore",
         ),
     )
-    mask = pc.greater(tbl["offset"], start_exclusive)
+    mask = pc.greater(tbl["offset"], int64(start_exclusive))
     if end_inclusive is not None:
-        mask = pc.and_(mask, pc.less_equal(tbl["offset"], end_inclusive))
+        mask = pc.and_(mask, pc.less_equal(tbl["offset"], int64(end_inclusive)))
     tbl = tbl.filter(mask)
-    if tbl.num_rows == 0:
+    n = tbl.num_rows
+    if n == 0:
         return
-    out = pa.table(
-        {
-            "key": pa.array([stream] * tbl.num_rows, type=pa.string()),
-            "value": tbl["value"].cast(pa.binary()),
-            "offset": tbl["offset"],
-            "timestamp": pc.multiply(tbl["timestamp"], 1000).cast(pa.timestamp("us")),
-        }
+    name = stream.encode("utf-8")
+    key_ends = pa.py_buffer(np.arange(n + 1, dtype=np.int32) * len(name))
+    key = pa.Array.from_buffers(pa.string(), n, [None, key_ends, pa.py_buffer(name * n)])
+    schema = to_arrow_schema(ENVELOPE)
+    ts_ms = tbl["timestamp"].cast(pa.timestamp("ms", tz="UTC"))  # broker ts is epoch ms
+    ts = ts_ms.cast(schema.field("timestamp").type)
+    out = pa.Table.from_arrays(
+        [key, tbl["value"].cast(pa.binary()), tbl["offset"], ts], schema=schema
     )
     yield from out.to_batches(max_chunksize=ARROW_BATCH_ROWS)
 
@@ -214,19 +254,20 @@ def _last_offset(root: str, stream: str) -> int:
     1-based). The high-water mark file dominates when retention emptied
     the log — assigned ordinals are never reused.
 
-    This runs DRIVER-SIDE on every micro-batch plan (latestOffset), so it
-    must not scale with log length: read a tail window and parse only the
-    last complete line (appends are line-atomic), growing the window in
-    the rare case a single record exceeds it."""
+    This runs DRIVER-SIDE on every trigger, so it must not scale with log
+    length: read a tail window and parse only the last complete line
+    (bytes after the last newline are a record still being appended),
+    growing the window in the rare case a single record exceeds it."""
     last = 0
     path = os.path.join(stream_dir(root, stream), LOG_FILE)
     if os.path.exists(path):
-        size = os.path.getsize(path)
-        window = 8192
         with open(path, "rb") as f:
+            size = os.fstat(f.fileno()).st_size
+            window = 8192
             while True:
                 f.seek(max(0, size - window))
-                chunk = f.read()
+                chunk = f.read(min(window, size))
+                chunk = chunk[: chunk.rfind(b"\n") + 1]
                 lines = [ln for ln in chunk.split(b"\n") if ln.strip()]
                 # the first line of a mid-file window may be a fragment;
                 # with >= 2 lines (or a full-file window) the last is whole
@@ -282,6 +323,8 @@ def _seek_start(root: str, stream: str, options: dict) -> int:
     if os.path.exists(path):
         with open(path, encoding="utf-8") as f:
             for line in f:
+                if not line.endswith("\n"):
+                    break  # a record still being appended
                 if not line.strip():
                     continue
                 rec = json.loads(line)
@@ -329,10 +372,9 @@ class EventStreamBatchReader(DataSourceReader):
         )
 
 
-
-
-class EventStreamStreamReader(DataSourceStreamReader):
-    """Micro-batch reader over one stream (single partition → total order)."""
+class EventStreamSimpleReader(SimpleDataSourceStreamReader):
+    """Micro-batch reader over one stream (single partition → total order),
+    read on the driver; see the module docstring."""
 
     def __init__(self, options: dict):
         self.root = options["path"]
@@ -345,63 +387,30 @@ class EventStreamStreamReader(DataSourceStreamReader):
             # WS close 1013 analog (app/app.py:311-318)
             raise ValueError(f"EventStream backing stream does not exist: {self.stream}")
         self.options = options
-        # maxOffsetsPerTrigger-style backpressure (SURVEY §2.9).
-        # Note: availableNow snapshots ONE latestOffset() as the run's
-        # target, so a capped availableNow run drains at most one cap of
-        # messages per run; a recurring trigger drains the backlog one cap
-        # per trigger. See latestOffset() for the restart contract.
+        # maxOffsetsPerTrigger-style backpressure (SURVEY §2.9). availableNow
+        # snapshots ONE latestOffset() as the run's target, so a capped
+        # availableNow run drains at most one cap; a recurring trigger
+        # drains the backlog one cap per trigger.
         self.max_per_batch = int(_opt(options, "maxOffsetsPerTrigger") or 0) or None
-        self._cursor: int | None = None  # last planned end offset
 
     def initialOffset(self) -> dict:
-        start = _seek_start(self.root, self.stream, self.options)
-        self._cursor = start
-        return {"offset": start}
+        return {"offset": _seek_start(self.root, self.stream, self.options)}
 
-    def latestOffset(self) -> dict:
-        latest = _last_offset(self.root, self.stream)
+    def read(self, start: dict):
+        lo = start["offset"]
+        hi = max(lo, _last_offset(self.root, self.stream))
         if self.max_per_batch is not None:
-            # Cap from the planner's position. Fresh run: the seek start IS
-            # the position (the engine calls latestOffset before
-            # initialOffset, so the cursor is still unset). Restart: the
-            # engine replays the last committed range via partitions()
-            # BEFORE calling latestOffset, which syncs the cursor to the
-            # committed offset — the cap never lands below it. If a
-            # recovery path ever skips that replay, the seek-start base
-            # could undershoot the committed start; partitions() clamps end
-            # up to start, so the worst case is one empty batch (same
-            # offset re-committed), never a regressed commit or
-            # re-delivery.
-            base = (
-                self._cursor
-                if self._cursor is not None
-                else _seek_start(self.root, self.stream, self.options)
-            )
-            latest = min(latest, base + self.max_per_batch)
-        self._cursor = latest
-        return {"offset": latest}
+            hi = min(hi, lo + self.max_per_batch)
+        if hi == lo:
+            # idle trigger: O(1), and never a non-empty read that does not
+            # advance (the engine rejects one)
+            return iter(()), start
+        # a list iterator, not a generator: the engine copy.copy()s the
+        # cached iterator when it plans the batch
+        return iter(list(_read_log(self.root, self.stream, lo, hi))), {"offset": hi}
 
-    def partitions(self, start: dict, end: dict):
-        # Never plan a regressed batch: the checkpoint's `start` is the
-        # committed truth, so clamp end up to it (a stale cap could
-        # otherwise hand us end < start).
-        lo, hi = start["offset"], max(start["offset"], end["offset"])
-        # Keep the rate-limit cursor in sync with the planner's actual
-        # progress (covers checkpoint-restart replay, where `start` comes
-        # from the offset log rather than our latestOffset()).
-        if self._cursor is None or hi > self._cursor:
-            self._cursor = hi
-        return [StreamSlice(self.stream, lo, hi)]
-
-    def read(self, partition: StreamSlice):
-        yield from _read_log(
-            self.root, partition.stream, partition.start_exclusive, partition.end_inclusive
-        )
-
-    def commit(self, end: dict) -> None:
-        # Offsets live in the checkpoint; the log is retained independently
-        # (age/size-bounded like the broker's retention, README.md:222-233).
-        pass
+    def readBetweenOffsets(self, start: dict, end: dict):
+        return _read_log(self.root, self.stream, start["offset"], end["offset"])
 
 
 class EventStreamDataSource(DataSource):
@@ -415,8 +424,8 @@ class EventStreamDataSource(DataSource):
     def reader(self, schema: StructType) -> DataSourceReader:
         return EventStreamBatchReader(dict(self.options))
 
-    def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return EventStreamStreamReader(dict(self.options))
+    def simpleStreamReader(self, schema: StructType) -> SimpleDataSourceStreamReader:
+        return EventStreamSimpleReader(dict(self.options))
 
 
 def enforce_retention(

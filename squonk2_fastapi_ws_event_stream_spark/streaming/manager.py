@@ -10,9 +10,8 @@ idle consumer lingers until the next message or a POISON pill,
 app/app.py:677-717; SURVEY §3.4).
 
 Delivery: each query runs `foreachBatch` → an in-process hub queue that the
-socket layer drains (the WebSocket-sink pattern of SURVEY §2.7 K1; the
-actual WS framing needs the `websockets` package, absent in this container —
-the hub is the seam where it plugs in, see api.py).
+socket layer drains (the WebSocket-sink pattern of SURVEY §2.7 K1):
+websocket.py drains the hub into RFC 6455 frames on the stdlib alone.
 """
 
 from __future__ import annotations

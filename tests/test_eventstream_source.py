@@ -200,3 +200,58 @@ def test_last_offset_tail_read_edge_cases(tmp_path):
         for i in range(n):
             w2.publish("m" * (1 + (i * 37) % 300), 1_700_000_000_000 + i)
         assert _last_offset(root, name) == n, n
+
+
+def test_readers_ignore_a_torn_final_line(tmp_path):
+    """A reader that races EventLogWriter.publish can see the last record
+    half written. Every log reader must treat the bytes after the last
+    newline as not yet published: the previous ordinal and its rows, and
+    the record once its newline lands."""
+    import os
+
+    from squonk2_fastapi_ws_event_stream_spark.sources.eventstream import (
+        LOG_FILE,
+        _last_offset,
+        _read_log,
+        _seek_start,
+        stream_dir,
+    )
+
+    root = str(tmp_path / "log")
+    w = EventLogWriter(root, "t")
+    for i in range(3):
+        w.publish("m%d" % i, BASE_TS + i)
+    line = '{"offset": 4, "timestamp": %d, "value": "m3"}\n' % (BASE_TS + 3)
+    path = os.path.join(stream_dir(root, "t"), LOG_FILE)
+
+    def offsets():
+        return [o for b in _read_log(root, "t", 0, None) for o in b["offset"].to_pylist()]
+
+    after_end = {"startingTimestampMs": BASE_TS + 10_000}
+    with open(path, "a", encoding="utf-8") as f:
+        f.write(line[:30])
+    assert _last_offset(root, "t") == 3
+    assert offsets() == [1, 2, 3]
+    assert _seek_start(root, "t", after_end) == 3
+    assert _seek_start(root, "t", {}) == 3
+
+    with open(path, "a", encoding="utf-8") as f:
+        f.write(line[30:])
+    assert _last_offset(root, "t") == 4
+    assert offsets() == [1, 2, 3, 4]
+    assert _seek_start(root, "t", after_end) == 4
+
+    # a torn record longer than every read window
+    with open(path, "a", encoding="utf-8") as f:
+        f.write('{"offset": 5, "timestamp": %d, "value": "%s' % (BASE_TS + 4, "x" * 200_000))
+    assert _last_offset(root, "t") == 4
+    assert offsets() == [1, 2, 3, 4]
+    assert _seek_start(root, "t", after_end) == 4
+
+    # a log holding only a torn first record is an empty stream
+    w2 = EventLogWriter(root, "u")
+    with open(w2.path, "a", encoding="utf-8") as f:
+        f.write(line[:30])
+    assert _last_offset(root, "u") == 0
+    assert list(_read_log(root, "u", 0, None)) == []
+    assert _seek_start(root, "u", after_end) == 0
